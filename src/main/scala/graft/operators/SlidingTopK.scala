@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.SketchConfig
-import graft.functions.MergeSketchesAggregator
+import graft.plans.TopKAggregates
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -17,7 +17,13 @@ import org.apache.spark.sql.functions._
   *   2. explode each tick's contribution range [t, t+N-1] (linear N-fold
   *      duplication of fixed-size blobs — an equality groupBy, NOT a range
   *      join) — #ticks × N tiny rows;
-  *   3. union-merge the window's sketches per t, emit top-K rows.
+  *   3. union-merge the window's sketches per t (`topk_merge`), emit top-K
+  *      rows (`topk_rows`).
+  *
+  * This IS the distributed SQL sliding plan of SqlFunctions.scala:30-43
+  * (`topk_sketch` per tick, exploded contribution ranges, literal ticks
+  * table, `topk_rows(topk_merge(sk), k)`) on the same per-tick blob
+  * representation the tree and salted merges in [[TopK]] use.
   *
   * At 100 TB the expensive step is (1), which is a single scan with map-side
   * reduction; (2)+(3) operate on #ticks rows of fixed-size blobs. The
@@ -34,14 +40,13 @@ object SlidingTopK {
     * @param cfg        sketch geometry; cfg.k is the candidate-tracking
     *                   capacity per tick-sketch (oversample upstream of this)
     * @param k          emitted rows per tick
-    * Output: (tick, rank, item, count) for every tick present in the input,
-    * where count sums the item's weight over ticks [t-N+1, t].
-    */
-  /** @param knownTicks when the output tick set is known a priori (ticks are
-    *                    time-derived, so at scale it always is), pass it here
-    *                    — the present-tick semi-join side then comes from a
-    *                    literal table instead of a second (column-pruned)
-    *                    scan of the input.
+    * @param knownTicks when the output tick set is known a priori (ticks are
+    *                   time-derived, so at scale it always is), pass it here
+    *                   — the present-tick semi-join side then comes from a
+    *                   literal table instead of a second (column-pruned)
+    *                   scan of the input.
+    * Output: (tick, rank, item, count, fingerprint) for every tick present in
+    * the input, where count sums the item's weight over ticks [t-N+1, t].
     */
   def perTick(
       df: DataFrame,
@@ -64,8 +69,7 @@ object SlidingTopK {
     )
     val perTickSketch = updates
       .groupBy(col("tick"))
-      .agg(graft.plans.TopKAggregates.sketchBytes(
-        col("item"), col("weight"), cfg).as("sketch"))
+      .agg(TopKAggregates.sketchBytes(col("item"), col("weight"), cfg).as("sketch"))
 
     // Each source tick s contributes to output ticks [s, s+N-1]: explode the
     // contribution range (N-fold duplication of fixed-size blobs, LINEAR in
@@ -82,7 +86,6 @@ object SlidingTopK {
       .select(explode(sequence(col("tick"), col("tick") + (windowTicks - 1)))
         .as("out_tick"), col("sketch"))
       .join(broadcast(tickList), Seq("out_tick"), "left_semi")
-    val mergeUdaf = udaf(new MergeSketchesAggregator(cfg, k))
     // Pin the merge exchange's width: the union-merge stage decodes and
     // merges N sketch blobs per tick — compute-dense per byte on a few MB
     // of blobs, which AQE's byte-based coalescing otherwise bundles into
@@ -94,8 +97,9 @@ object SlidingTopK {
     window
       .repartition(mergeParts, col("out_tick"))
       .groupBy(col("out_tick"))
-      .agg(mergeUdaf(col("sketch")).as("topk"))
-      .select(col("out_tick").as("tick"), posexplode(col("topk")).as(Seq("rank0", "e")))
+      .agg(TopKAggregates.mergeBlobs(col("sketch")).as("merged"))
+      .select(col("out_tick").as("tick"),
+        posexplode(TopKAggregates.sketchRows(col("merged"), lit(k))).as(Seq("rank0", "e")))
       .select(
         col("tick"),
         (col("rank0") + 1).cast("long").as("rank"),

@@ -92,12 +92,4 @@ object TextAnalysis {
       lit(0L),
       (acc, x) => pmod(acc * 31L + x, lit(2147483647L))
     )
-
-  /** Full-content fingerprint: seeded XXH32 of the raw text (engine-side
-    * exactness checks; no SQL oracle — xxh32 isn't available in DuckDB).
-    */
-  val xxh32Udf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf((s: String, seed: Int) =>
-      if (s == null) null
-      else java.lang.Long.valueOf(graft.core.XxHash32.hashString(s, seed).toLong & 0xffffffffL))
 }

@@ -1,10 +1,10 @@
 package graft.operators
 
-import graft.core.{Sketch, SketchCodec, SketchConfig}
-import graft.functions.{TopKAggregator, TopKSketchBytesAggregator}
+import graft.core.SketchConfig
+import graft.plans.{SketchCountExpr, TopKAggregates}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** High-level top-K operators over DataFrames.
   *
@@ -17,19 +17,18 @@ import org.apache.spark.sql.functions._
   */
 object TopK {
 
-  /** The UDAF handle: `df.agg(TopK.udafFor(cfg)($"item", $"weight"))`. */
-  def udafFor(cfg: SketchConfig, oversample: Int = 4): UserDefinedFunction =
-    udaf(new TopKAggregator(cfg, oversample))
-
-  /** UDAF emitting the serialized sketch blob instead of rows. */
-  def sketchUdafFor(cfg: SketchConfig): UserDefinedFunction =
-    udaf(new TopKSketchBytesAggregator(cfg))
-
   /** The aggregation Column on the native (InternalRow-level) expression:
     * partials track k×oversample candidates, emitK = cfg.k rows come out.
+    *
+    * Why oversample: bucket counters are unaffected by heap capacity (the
+    * heap only selects what gets *reported*, reference: sketch.go:169), but
+    * a partition-local top-k heap can drop items that are top-k only
+    * globally; oversampling the candidate set in the partials recovers them.
+    * oversample = 1 reproduces the reference's exact single-writer candidate
+    * retention.
     */
   def topkColumn(item: Column, weight: Column, cfg: SketchConfig, oversample: Int): Column =
-    graft.plans.TopKAggregates.itemsTopK(
+    TopKAggregates.itemsTopK(
       item, weight, cfg.copy(k = cfg.k * math.max(1, oversample)), cfg.k)
 
   /** Shared global-top-K plan with the two-level TREE merge and its cutover.
@@ -58,7 +57,6 @@ object TopK {
     */
   private def globalTopK(df: DataFrame, k: Int, mergeFanIn: Int,
                          flatAgg: Column, blobAgg: Column): DataFrame = {
-    import graft.plans.TopKAggregates
     // streaming plans reject multi-aggregation (groupBy agg -> agg), so the
     // flat single-union plan is the only legal shape there — even when the
     // caller forces the tree with a negative fan-in
@@ -105,7 +103,6 @@ object TopK {
     */
   def aggregate(df: DataFrame, item: Column, weight: Column, cfg: SketchConfig,
                 oversample: Int = 4, mergeFanIn: Int = 64): DataFrame = {
-    import graft.plans.TopKAggregates
     val bufCfg  = cfg.copy(k = cfg.k * math.max(1, oversample))
     val updates = df.select(item.cast("string").as("item"), weight.cast("long").as("weight"))
     globalTopK(updates, cfg.k, mergeFanIn,
@@ -120,7 +117,6 @@ object TopK {
     */
   def tokensArray(df: DataFrame, tokens: Column, cfg: SketchConfig,
                   oversample: Int = 4, mergeFanIn: Int = 64): DataFrame = {
-    import graft.plans.TopKAggregates
     val bufCfg = cfg.copy(k = cfg.k * math.max(1, oversample))
     globalTopK(df, cfg.k, mergeFanIn,
       flatAgg = TopKAggregates.tokensTopK(tokens, bufCfg, cfg.k),
@@ -154,7 +150,6 @@ object TopK {
     */
   def aggregateBySalted(df: DataFrame, groupCols: Seq[Column], item: Column, weight: Column,
                         cfg: SketchConfig, saltFanout: Int = 16, oversample: Int = 4): DataFrame = {
-    import graft.plans.TopKAggregates
     val bufCfg = cfg.copy(k = cfg.k * math.max(1, oversample))
     val keyed = df.select((groupCols :+ item.cast("string").as("item")
       :+ weight.cast("long").as("weight")): _*)
@@ -173,25 +168,11 @@ object TopK {
   }
 
   /** `Count(item)` over a serialized sketch blob (reference: sketch.go:90-111)
-    * as a scalar UDF: `topkCount(sketchCol, itemCol)`.
+    * as a native expression: `countColumn(sketchCol, itemCol)`, the
+    * DataFrame handle of SQL `topk_count`. Membership is SQL `topk_query`.
     */
-  val countUdf: UserDefinedFunction =
-    udf((bytes: Array[Byte], item: String) =>
-      if (bytes == null || item == null) 0L else SketchCodec.decode(bytes).count(item))
-
-  /** Native-expression variant of [[countUdf]] (no Scala-UDF encoders). */
   def countColumn(blob: Column, item: Column): Column =
-    org.apache.spark.sql.graftbridge.Bridge.column(
-      graft.plans.SketchCountExpr(
-        org.apache.spark.sql.graftbridge.Bridge.expression(blob),
-        org.apache.spark.sql.graftbridge.Bridge.expression(item)))
-
-  /** `Query(item)` membership over a serialized sketch blob
-    * (reference: sketch.go:172-175).
-    */
-  val queryUdf: UserDefinedFunction =
-    udf((bytes: Array[Byte], item: String) =>
-      if (bytes == null || item == null) false else SketchCodec.decode(bytes).query(item))
+    Bridge.column(SketchCountExpr(Bridge.expression(blob), Bridge.expression(item)))
 
   /** Exact top-K oracle with the same output shape and ordering — the
     * differential-testing baseline (SURVEY.md §5.3). Spark picks

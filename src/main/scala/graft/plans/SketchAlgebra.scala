@@ -151,8 +151,8 @@ case class SketchCountExpr(left: Expression, right: Expression)
   @transient private lazy val memo = new BlobDecodeMemo
 
   // the reference's Count of an unknown item is 0 (sketch.go:90-111): null
-  // blob / null item count as 0, not SQL NULL (matches the pre-existing UDF
-  // surface, so sums over sparse lookups keep counting zeros).
+  // blob / null item count as 0, not SQL NULL (so sums over sparse lookups
+  // keep counting zeros).
   // Known per-row cost: one String materialization (and a re-encode inside
   // Sketch.count) — kept deliberately: the tracked-item fast path is the
   // heap's String-keyed index (exact reference semantics), so a byte-keyed
@@ -188,7 +188,7 @@ case class SketchQueryExpr(left: Expression, right: Expression)
   @transient private lazy val memo = new BlobDecodeMemo
 
   // membership of an unknown/null item is false, not SQL NULL (reference:
-  // sketch.go:172-175; matches the pre-existing UDF surface)
+  // sketch.go:172-175)
   override def eval(input: InternalRow): Any = {
     val blob = left.eval(input)
     val item = right.eval(input)

@@ -1,20 +1,20 @@
 package graft.spark
 
 import graft.core.{Hashing, SketchConfig}
-import graft.functions.TokenUpdate
-import graft.operators.TopK
+import graft.operators.{SessionTopK, SlidingTopK, TopK}
+import graft.plans.TopKAggregates
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-class TopKAggregatorSpec extends AnyFunSuite {
+class TopKAggregatorSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
   test("golden parity on a single partition (sliding/sketch_test.go:97-127 shape)") {
-    val updates = Seq(
-      TokenUpdate("X", 5L), TokenUpdate("Y", 3L), TokenUpdate("Z", 2L), TokenUpdate("Y", 1L)
-    )
-    val df  = spark.createDataset(updates).repartition(1).toDF()
+    val df  = Seq(("X", 5L), ("Y", 3L), ("Z", 2L), ("Y", 1L))
+      .toDF("item", "weight").repartition(1)
     val cfg = SketchConfig.withDefaults(3, width = 256, depth = 3)
     val out = TopK.aggregate(df, col("item"), col("weight"), cfg).collect()
     assert(out.map(r => (r.getString(0), r.getLong(1))).toSeq ==
@@ -28,9 +28,9 @@ class TopKAggregatorSpec extends AnyFunSuite {
     // must be exact and the top-K must equal the exact oracle including order.
     val rows = (0 until 6000).map { i =>
       val item = s"it${i % 60}"
-      TokenUpdate(item, (i % 7 + 1).toLong)
+      (item, (i % 7 + 1).toLong)
     }
-    val df  = spark.createDataset(rows).repartition(8).toDF()
+    val df  = rows.toDF("item", "weight").repartition(8)
     val cfg = SketchConfig.withDefaults(10, width = 1024, depth = 3)
     val ours  = TopK.aggregate(df, col("item"), col("weight"), cfg)
       .select("item", "count").collect().map(r => (r.getString(0), r.getLong(1))).toSeq
@@ -63,13 +63,13 @@ class TopKAggregatorSpec extends AnyFunSuite {
     val rng   = new java.util.Random(7)
     val items = (0 until n).map { _ =>
       val u = rng.nextDouble()
-      TokenUpdate(s"t${(2000 * u * u * u).toInt}", 1L)
+      (s"t${(2000 * u * u * u).toInt}", 1L)
     }
-    val df  = spark.createDataset(items).repartition(8).toDF()
+    val df  = items.toDF("item", "weight").repartition(8)
     val cfg = SketchConfig.withDefaults(20, width = 1024, depth = 3)
     val ours = TopK.aggregate(df, col("item"), col("weight"), cfg)
       .select("item", "count").collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    val truth = items.groupBy(_.item).view.mapValues(_.map(_.weight.longValue).sum).toMap
+    val truth = items.groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
     val exactTop = truth.toSeq.sortBy { case (i, c) => (-c, i) }.take(20).map(_._1).toSet
     // under-estimation only
     ours.foreach { case (item, est) =>
@@ -80,9 +80,9 @@ class TopKAggregatorSpec extends AnyFunSuite {
     assert(recall >= 18, s"recall@20 = $recall")
   }
 
-  test("udaf tolerates NULL items and NULL weights (null->no-op, matching SQL path)") {
-    // TokenUpdate.weight is boxed precisely so the encoder's AssertNotNull
-    // can't kill the query on a NULL weight row; reduce must skip it.
+  test("native aggregate tolerates NULL items and NULL weights (ItemWeightReader null->0)") {
+    // ItemWeightReader contract: a NULL item row is skipped and a NULL
+    // weight reads as 0, so neither kills the query nor moves a count.
     val rows = Seq[(String, java.lang.Long)](
       ("X", 5L), (null, 3L), ("X", null), ("Y", 2L), ("Y", null)
     ).toDF("item", "weight")
@@ -154,16 +154,17 @@ class TopKAggregatorSpec extends AnyFunSuite {
     assert(flat.map(e => (e._1, e._2)) == exact)
   }
 
-  test("sketch-blob aggregator + count/query UDFs (Count/Query surface)") {
+  test("sketch blob + native count/query lookups (Count/Query surface)") {
+    graft.functions.SqlFunctions.register(spark)
     val df  = Seq(("X", 5L), ("Y", 3L), ("Z", 2L)).toDF("item", "weight")
     val cfg = SketchConfig.withDefaults(2, width = 256, depth = 3)
-    val blob = df.agg(TopK.sketchUdafFor(cfg)(col("item"), col("weight")).as("sk"))
+    val blob = df.agg(TopKAggregates.sketchBytes(col("item"), col("weight"), cfg).as("sk"))
     val checked = blob.select(
-      TopK.countUdf(col("sk"), lit("X")).as("cx"),
-      TopK.countUdf(col("sk"), lit("Z")).as("cz"),
-      TopK.queryUdf(col("sk"), lit("X")).as("qx"),
-      TopK.queryUdf(col("sk"), lit("Z")).as("qz"),
-      TopK.queryUdf(col("sk"), lit("nope")).as("qn")
+      TopK.countColumn(col("sk"), lit("X")).as("cx"),
+      TopK.countColumn(col("sk"), lit("Z")).as("cz"),
+      expr("topk_query(sk, 'X')").as("qx"),
+      expr("topk_query(sk, 'Z')").as("qz"),
+      expr("topk_query(sk, 'nope')").as("qn")
     ).head()
     assert(checked.getLong(0) == 5L)
     assert(checked.getLong(1) == 2L) // estimate from buckets (evicted from k=2 heap)
@@ -222,6 +223,72 @@ class TopKAggregatorSpec extends AnyFunSuite {
       (4L, 1L, "Z", 3L), (4L, 2L, "Y", 1L),
       (5L, 1L, "X", 1L)
     ))
+  }
+
+  test("perTick with a one-tick window emits each tick's own blob rows (colliding geometry)") {
+    // A one-tick window merges exactly one blob, and topk_merge adopts it
+    // as is (no merge into a fresh sketch, so no heap re-estimate against
+    // the cells): every output tick must be topk_rows of that tick's own
+    // topk_sketch blob. Width 16 x depth 2 under 120 items collides on
+    // every row.
+    val rng  = new java.util.Random(5)
+    val rows = (0 until 3000).map { _ =>
+      val u = rng.nextDouble()
+      (rng.nextInt(6).toLong, s"i${(120 * u * u).toInt}", (rng.nextInt(3) + 1).toLong)
+    }
+    val df  = rows.toDF("tick", "item", "weight").coalesce(1)
+    val cfg = SketchConfig.withDefaults(8, width = 16, depth = 2)
+    val k   = 5
+    val got = SlidingTopK.perTick(df, col("tick"), col("item"), col("weight"),
+        windowTicks = 1, cfg = cfg, k = k)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3), r.getLong(4)))
+      .toSet
+    val own = df.groupBy(col("tick"))
+      .agg(TopKAggregates.sketchBytes(col("item"), col("weight"), cfg).as("sk"))
+      .select(col("tick"), posexplode(TopKAggregates.sketchRows(col("sk"), lit(k))))
+      .collect().map(r => (r.getLong(0), r.getInt(1) + 1L, r.getStruct(2).getString(0),
+        r.getStruct(2).getLong(1), r.getStruct(2).getLong(2)))
+      .toSet
+    assert(got.nonEmpty && got == own)
+    val exact = rows.groupBy(r => (r._1, r._2)).view.mapValues(_.map(_._3).sum).toMap
+    got.foreach { case (t, _, item, c, _) =>
+      assert(c <= exact((t, item)), s"tick $t: $item over-estimated: $c > ${exact((t, item))}")
+    }
+  }
+
+  test("top-K operators plan only native expressions (no Scala UDF/UDAF/Aggregator)") {
+    // guard against a typed-Aggregator or Scala-UDF twin creeping back into
+    // an operator: inspect every expression of the final executed plan
+    val twins = Set("ScalaAggregator", "ScalaUDAF", "ScalaUDF")
+    def twinNodes(df: DataFrame): Seq[String] = {
+      df.collect() // AQE: settle the final plan first
+      collectWithSubqueries(df.queryExecution.executedPlan) { case p => p }
+        .flatMap(_.expressions.flatMap(_.collect {
+          case e if twins(e.getClass.getSimpleName) => e.getClass.getSimpleName
+        }))
+    }
+    val rows = (0 until 400).map(i => (s"g${i % 3}", s"it${i % 17}", (i % 4 + 1).toLong,
+      (i % 5).toLong, new java.sql.Timestamp(i * 600000L)))
+    val df  = rows.toDF("grp", "item", "weight", "tick", "ts").repartition(4)
+    val tok = (0 until 200).map(i => (i.toLong, Array.tabulate(8)(j => (i * j) % 31)))
+      .toDF("doc_id", "tokens").repartition(4)
+    val cfg = SketchConfig.withDefaults(5, width = 256, depth = 3)
+    val plans = Seq(
+      "aggregate"         -> TopK.aggregate(df, col("item"), col("weight"), cfg),
+      "aggregate tree"    -> TopK.aggregate(df, col("item"), col("weight"), cfg, mergeFanIn = -4),
+      "aggregateBy"       -> TopK.aggregateBy(df, Seq(col("grp")), col("item"), col("weight"), cfg),
+      "aggregateBySalted" -> TopK.aggregateBySalted(df, Seq(col("grp")), col("item"),
+        col("weight"), cfg, saltFanout = 4),
+      "tokensArray flat"  -> TopK.tokensArray(tok, col("tokens"), cfg, mergeFanIn = 1),
+      "tokensArray tree"  -> TopK.tokensArray(tok, col("tokens"), cfg, mergeFanIn = -4),
+      "perTick"           -> SlidingTopK.perTick(df, col("tick"), col("item"), col("weight"),
+        windowTicks = 2, cfg = cfg, k = 3),
+      "aggregateGap"      -> SessionTopK.aggregateGap(df, col("grp"), col("ts"), 3600L,
+        col("item"), col("weight"), cfg))
+    plans.foreach { case (name, plan) =>
+      val found = twinNodes(plan)
+      assert(found.isEmpty, s"$name plans non-native nodes: ${found.distinct.mkString(", ")}")
+    }
   }
 
   test("codec round-trip preserves behavior") {

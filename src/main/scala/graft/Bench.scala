@@ -54,18 +54,22 @@ object Bench {
     * isolated re-measures (tools/TimeQuery) covering queries newer than the
     * last round artifact. A source contributes only when its recorded
     * `"sf":"<dir>"` matches the dir being benchmarked (sf0.1 floors must not
-    * trigger quiet-window re-runs on a legitimately-slower larger SF), and
-    * only positive times (the -1.0 failure sentinel must not poison the
-    * min). Per query the SMALLER of the two sources wins. Empty map if
-    * nothing is readable; the guard then never triggers.
+    * trigger quiet-window re-runs on a legitimately-slower larger SF) AND its
+    * recorded `"cpus":N` matches `cpus` (a local[32] floor says nothing about
+    * a 4-core run; a source without `cpus` contributes nothing), and only
+    * positive times (the -1.0 failure sentinel must not poison the min). Per
+    * query the SMALLEST source wins. Empty map if nothing is readable; the
+    * guard then never triggers. `dir` is where the artifacts are read from.
     */
-  def readPrevBenchTimes(sfDir: String): Map[String, Double] = {
+  def readPrevBenchTimes(sfDir: String, cpus: String,
+                         dir: java.io.File = new java.io.File(".")): Map[String, Double] = {
     def queriesOf(path: java.nio.file.Path): Map[String, Double] = try {
       val raw = new String(java.nio.file.Files.readAllBytes(path),
         java.nio.charset.StandardCharsets.UTF_8)
       val text = raw.replace("\\\"", "\"")
-      val sfOf = """"sf"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text).map(_.group(1))
-      if (!sfOf.contains(sfDir)) Map.empty
+      val sfOf   = """"sf"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(text).map(_.group(1))
+      val cpusOf = """"cpus"\s*:\s*([0-9]+)""".r.findFirstMatchIn(text).map(_.group(1))
+      if (!sfOf.contains(sfDir) || !cpusOf.contains(cpus.trim)) Map.empty
       else {
         val qsec = """"queries"\s*:\s*\{([^}]*)\}""".r
         val pair = """"([^"]+)"\s*:\s*(-?[0-9.eE+]+)""".r
@@ -77,14 +81,14 @@ object Bench {
       }
     } catch { case _: Throwable => Map.empty }
     val prev = try {
-      val files = Option(new java.io.File(".").listFiles()).getOrElse(Array.empty)
+      val files = Option(dir.listFiles()).getOrElse(Array.empty)
         .filter(f => f.getName.matches("BENCH_r\\d+\\.json")).sortBy(_.getName)
       if (files.isEmpty) Map.empty[String, Double] else queriesOf(files.last.toPath)
     } catch { case _: Throwable => Map.empty[String, Double] }
-    val local = queriesOf(java.nio.file.Paths.get("BENCH_LOCAL_BASELINE.json"))
+    val local = queriesOf(new java.io.File(dir, "BENCH_LOCAL_BASELINE.json").toPath)
     // BENCH_SELF.json: the previous run's complete self-persisted artifact
     // (the round artifact's stdout capture can be truncated — see main)
-    val self = queriesOf(java.nio.file.Paths.get("BENCH_SELF.json"))
+    val self = queriesOf(new java.io.File(dir, "BENCH_SELF.json").toPath)
     (prev.keySet ++ local.keySet ++ self.keySet).map { k =>
       k -> Seq(prev.get(k), local.get(k), self.get(k)).flatten.min
     }.toMap
@@ -121,22 +125,8 @@ object Bench {
     // pin the locale so f"..%.3f" can never emit comma decimals
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // the bench table is small but many-filed; size scan splits for full
-      // parallelism (at 100 TB the defaults already yield thousands of splits)
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      // engine-recommended (see SessionTopK): keep many-small-groups
-      // aggregations in object-hash mode
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus  = BenchSession.cpus
+    val spark = BenchSession.create()
 
     // JVM/codegen/scan warmup so per-query timings measure OPERATORS, not
     // first-call costs (JIT of UDF/kernel code paths, codegen compilation,
@@ -160,7 +150,7 @@ object Bench {
     // ~the full surface's runtime between a query's reps, so one contended
     // window inflates ONE rep of many queries instead of ALL reps of a few.
     val errors    = scala.collection.mutable.ArrayBuffer.empty[String]
-    val prevTimes = readPrevBenchTimes(sfDir)
+    val prevTimes = readPrevBenchTimes(sfDir, cpus)
     val names     = SparkEntry.queries.keys.toSeq.sorted
     def runOnce(name: String): Double = {
       val fn = SparkEntry.queries(name)

@@ -2,6 +2,9 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.unsafe.Platform
+import org.apache.spark.unsafe.array.ByteArrayMethods
+
 /** Sketch configuration with the reference's defaults
   * (reference: sketch.go:41-67, options.go:3-17):
   * width = max(256, ⌊k·ln k⌋), depth = max(3, ⌊ln k⌋), decay = 0.9, LUT size 256.
@@ -35,16 +38,17 @@ object SketchConfig {
       lutSize: Int = 256,
       seed: Long = 0x5eed_70c4L
   ): SketchConfig = {
-    val logK  = math.log(k.toDouble).toInt
-    val klogK = (k.toDouble * math.log(k.toDouble)).toInt
-    SketchConfig(
-      k = k,
-      width = if (width > 0) width else math.max(256, klogK),
-      depth = if (depth > 0) depth else math.max(3, logK),
-      decay = decay,
-      lutSize = lutSize,
-      seed = seed
-    )
+    val (w, d) = geometry(k, width, depth)
+    SketchConfig(k, w, d, decay, lutSize, seed)
+  }
+
+  /** Default geometry (reference: sketch.go:41-67) for unset (<= 0)
+    * width/depth: width = max(256, ⌊k·ln k⌋), depth = max(3, ⌊ln k⌋).
+    */
+  private[core] def geometry(k: Int, width: Int, depth: Int): (Int, Int) = {
+    val lnK = math.log(k.toDouble)
+    (if (width > 0) width else math.max(256, (k * lnK).toInt),
+      if (depth > 0) depth else math.max(3, lnK.toInt))
   }
 
   // LUTs are pure functions of (decay, size); memoize so many-group
@@ -139,7 +143,7 @@ final class Sketch(val cfg: SketchConfig) extends Serializable {
     len
   }
 
-  private def materialize(fp: Int, bytes: Array[Byte], off: Int, len: Int,
+  private def materialize(fp: Int, base: AnyRef, offset: Long, len: Int,
                           item: String): String = {
     if (item != null) return item
     if (cacheFp == null) {
@@ -149,12 +153,14 @@ final class Sketch(val cfg: SketchConfig) extends Serializable {
     }
     val slot = fp & (CacheSlots - 1)
     val cb   = cacheBytes(slot)
-    if (cacheFp(slot) == fp && cb != null &&
-        java.util.Arrays.equals(cb, 0, cb.length, bytes, off, off + len))
+    if (cacheFp(slot) == fp && cb != null && cb.length == len &&
+        ByteArrayMethods.arrayEquals(cb, Platform.BYTE_ARRAY_OFFSET, base, offset, len))
       return cacheStr(slot)
-    val s = new String(bytes, off, len, StandardCharsets.UTF_8)
+    val bytes = new Array[Byte](len)
+    Platform.copyMemory(base, offset, bytes, Platform.BYTE_ARRAY_OFFSET, len)
+    val s = new String(bytes, StandardCharsets.UTF_8)
     cacheFp(slot) = fp
-    cacheBytes(slot) = java.util.Arrays.copyOfRange(bytes, off, off + len)
+    cacheBytes(slot) = bytes
     cacheStr(slot) = s
     s
   }
@@ -175,56 +181,9 @@ final class Sketch(val cfg: SketchConfig) extends Serializable {
       counts(idx) = c
       c
     } else { // collision: probabilistic decay (sketch.go:141-165)
-      // LOCKSTEP: this trial loop (threshold check, geometricTrials
-      // bookkeeping, k > incrementRemaining early-out, takeover remainder
-      // incrementRemaining - (k-1)) is mirrored in SlidingSketch.add, which
-      // differs only in where the decrement/takeover lands (ring min-slot
-      // vs this scalar). The shared ARITHMETIC lives in SketchOps; the loop
-      // shape itself is duplicated for the two storage models — any fix
-      // here MUST be applied there too (and vice versa).
-      var c                  = count
-      var incrementRemaining = increment
-      var taken              = 0L
-      var break              = false
-      while (incrementRemaining > 0 && !break) {
-        val decay = decayAt(c)
-        if (incrementRemaining <= Sketch.GeometricSkipThreshold) {
-          // reference-exact per-trial draws (one draw per increment unit)
-          if (rng.nextFloat() < decay) {
-            c -= 1
-            if (c == 0L) {
-              fingerprints(idx) = fingerprint
-              c = incrementRemaining
-              taken = c
-              break = true
-            }
-          }
-          if (!break) incrementRemaining -= 1
-        } else {
-          // huge weighted adds: sample the run of failed trials to the next
-          // decrement in closed form (same distribution, ONE draw) instead
-          // of per-unit trials — a 2e9-weight add must not spin 2e9 times.
-          val k = rng.geometricTrials(decay)
-          if (k > incrementRemaining) {
-            incrementRemaining = 0L // all remaining trials failed
-          } else {
-            c -= 1
-            if (c == 0L) {
-              // the successful trial does not consume its unit (the
-              // remaining mass takes the bucket over) — same bookkeeping as
-              // the per-trial loop above
-              fingerprints(idx) = fingerprint
-              c = incrementRemaining - (k - 1)
-              taken = c
-              break = true
-            } else {
-              incrementRemaining -= k
-            }
-          }
-        }
-      }
-      counts(idx) = c
-      taken
+      val r = SketchOps.collide(rng, decayLUT, count, increment)
+      if (r >= 0L) { counts(idx) = count - r; 0L }
+      else { fingerprints(idx) = fingerprint; counts(idx) = -r; -r }
     }
   }
 
@@ -234,16 +193,30 @@ final class Sketch(val cfg: SketchConfig) extends Serializable {
     */
   def addBytes(bytes: Array[Byte], off: Int, len: Int, increment: Long,
                item: String): Boolean = {
+    java.util.Objects.checkFromIndexSize(off, len, bytes.length)
+    addAt(bytes, Platform.BYTE_ARRAY_OFFSET + off, len, increment, item)
+  }
+
+  /** Same update hashing the item in place from any memory base (Spark
+    * UTF8String payloads: `getBaseObject/getBaseOffset/numBytes`) — no
+    * per-row byte copy; bytes are copied out only when an update is admitted
+    * to the heap and misses the materialization cache.
+    */
+  def addUnsafe(base: AnyRef, offset: Long, len: Int, increment: Long): Boolean =
+    addAt(base, offset, len, increment, null)
+
+  private def addAt(base: AnyRef, offset: Long, len: Int, increment: Long,
+                    item: String): Boolean = {
     // the reference's increment domain is uint32 (sketch.go:118); reject
     // non-positive weights so a user-supplied weight column can't drive an
     // owned bucket negative or claim an empty bucket with count <= 0 (which
     // would break the count==0 empty-bucket sentinel and heap invariants)
     if (increment <= 0L) return false
-    val fingerprint = Hashing.fingerprint(bytes, off, len)
+    val fingerprint = XxHash32.hashUnsafe(base, offset, len, Hashing.FingerprintSeed)
     var maxCount    = 0L
     var row         = 0
     while (row < depth) {
-      val idx = Hashing.bucketIndex(bytes, off, len, row, width)
+      val idx = Hashing.bucketIndexUnsafe(base, offset, len, row, width)
       val c   = updateBucket(idx, fingerprint, increment)
       if (c > maxCount) maxCount = c
       row += 1
@@ -251,38 +224,8 @@ final class Sketch(val cfg: SketchConfig) extends Serializable {
     // admission precheck mirrors heap.update's reject rule (heap/heap.go:137)
     // so rejected updates never materialize a String
     if (maxCount < heap.minCount && heap.isFull) false
-    else heap.update(materialize(fingerprint, bytes, off, len, item), fingerprint, maxCount)
+    else heap.update(materialize(fingerprint, base, offset, len, item), fingerprint, maxCount)
   }
-
-  /** Same update hashing the item in place from any memory base (Spark
-    * UTF8String payloads: `getBaseObject/getBaseOffset/numBytes`) — no
-    * per-row byte copy; bytes are copied out only when an update is admitted
-    * to the heap.
-    */
-  def addUnsafe(base: AnyRef, offset: Long, len: Int, increment: Long): Boolean = {
-    if (increment <= 0L) return false // see addBytes: uint32 increment domain
-    val fingerprint = XxHash32.hashUnsafe(base, offset, len, Hashing.FingerprintSeed)
-    var maxCount    = 0L
-    var row         = 0
-    while (row < depth) {
-      val h   = XxHash32.hashUnsafe(base, offset, len, row)
-      val idx = row * width + ((h & 0xffffffffL) % width).toInt
-      val c   = updateBucket(idx, fingerprint, increment)
-      if (c > maxCount) maxCount = c
-      row += 1
-    }
-    if (maxCount < heap.minCount && heap.isFull) false
-    else {
-      val bytes = new Array[Byte](len)
-      org.apache.spark.unsafe.Platform.copyMemory(
-        base, offset, bytes, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET, len)
-      heap.update(materialize(fingerprint, bytes, 0, len, null), fingerprint, maxCount)
-    }
-  }
-
-  /** decay^count via LUT + closed-form extension (shared: SketchOps). */
-  @inline private def decayAt(count: Long): Float =
-    SketchOps.decayAt(decayLUT, count)
 
   /** Point estimate (reference: sketch.go:90-111): exact tracked count on a
     * heap hit, else max matching-fingerprint bucket count, else 0.
@@ -290,17 +233,8 @@ final class Sketch(val cfg: SketchConfig) extends Serializable {
   def count(item: String): Long = {
     val tracked = heap.countOf(item)
     if (tracked >= 0) return tracked
-    val bytes       = item.getBytes(StandardCharsets.UTF_8)
-    val fingerprint = Hashing.fingerprint(bytes)
-    var maxCount    = 0L
-    var row         = 0
-    while (row < depth) {
-      val idx = Hashing.bucketIndex(bytes, row, width)
-      if (fingerprints(idx) == fingerprint && counts(idx) > maxCount)
-        maxCount = counts(idx)
-      row += 1
-    }
-    maxCount
+    val bytes = item.getBytes(StandardCharsets.UTF_8)
+    SketchOps.estimate(bytes, Hashing.fingerprint(bytes), depth, width, fingerprints, counts)
   }
 
   /** Top-K membership (reference: sketch.go:172-175). */
@@ -335,18 +269,7 @@ final class Sketch(val cfg: SketchConfig) extends Serializable {
     * either input.
     */
   def merge(other: Sketch): Sketch = {
-    require(other.width == width && other.depth == depth, "sketch geometry mismatch")
-    // k/decay/seed are part of merge compatibility too: a k mismatch makes
-    // the union's candidate-heap CAPACITY depend on which side the merge
-    // direction kept (blob arrival order is nondeterministic after a
-    // shuffle — same query, different top-set sizes per run); decay/seed
-    // steer the collision paths. Partials of one query always share cfg,
-    // so this rejects only genuinely mixed pipelines.
-    require(other.cfg.k == cfg.k && other.cfg.decay == cfg.decay &&
-      other.cfg.seed == cfg.seed && other.cfg.lutSize == cfg.lutSize,
-      s"sketch config mismatch: k=${cfg.k}/${other.cfg.k} " +
-        s"decay=${cfg.decay}/${other.cfg.decay} seed=${cfg.seed}/${other.cfg.seed} " +
-        s"lutSize=${cfg.lutSize}/${other.cfg.lutSize}")
+    SketchOps.requireMergeable("sketch", cfg, other.cfg)
     var i = 0
     while (i < cells) {
       val ca = counts(i); val cb = other.counts(i)
@@ -364,7 +287,7 @@ final class Sketch(val cfg: SketchConfig) extends Serializable {
     }
     // Union heap candidates, re-estimated against merged cells.
     SketchOps.rebuildHeapFromUnion(heap, other.heap.entries, cfg.k,
-      depth, width, fingerprints, counts(_))
+      depth, width, fingerprints, counts)
     this
   }
 }

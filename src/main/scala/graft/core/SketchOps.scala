@@ -2,9 +2,11 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 
-/** Logic shared verbatim by the plain and sliding sketches — factored out so
-  * a fix to the decay extension or the merge tie-break cannot drift between
-  * the two implementations.
+/** The HeavyKeeper kernel shared by the plain and sliding sketches: the
+  * collision trial loop (`collide`), the decay extension, the point estimate
+  * (`estimate`), the merge config check and the merge heap rebuild. The two
+  * sketches differ only in where a decrement or takeover lands (a scalar
+  * cell vs a ring slot); every rule that decides it lives here, once.
   */
 private[core] object SketchOps {
 
@@ -53,26 +55,85 @@ private[core] object SketchOps {
     }
   }
 
+  /** THE collision trial loop (reference: sketch.go:141-165, applied to a
+    * ring by sliding/sketch.go:222-243): `increment` units hit a bucket held
+    * by another item at `count`; each unit decays it with probability
+    * decay^count. Returns d >= 0 when the owner survives having lost d
+    * units, or -mass (mass >= 1) when the count reached zero and the
+    * remaining mass takes the bucket over. The decay depends only on the
+    * scalar count, so the caller may apply the d decrements afterwards.
+    */
+  def collide(rng: Rng, decayLUT: Array[Float], count: Long, increment: Long): Long = {
+    var c         = count
+    var remaining = increment
+    while (remaining > 0) {
+      val decay = decayAt(decayLUT, c)
+      if (remaining <= Sketch.GeometricSkipThreshold) {
+        // reference-exact per-trial draws (one draw per increment unit)
+        if (rng.nextFloat() < decay) {
+          c -= 1
+          if (c == 0L) return -remaining
+        }
+        remaining -= 1
+      } else {
+        // huge weighted adds: sample the run of failed trials to the next
+        // decrement in closed form (same distribution, ONE draw) instead of
+        // per-unit trials — a 2e9-weight add must not spin 2e9 times
+        val k = rng.geometricTrials(decay)
+        if (k > remaining) remaining = 0L // all remaining trials failed
+        else {
+          c -= 1
+          // the successful trial does not consume its unit: the remaining
+          // mass takes the bucket over, as in the per-trial branch
+          if (c == 0L) return -(remaining - (k - 1))
+          remaining -= k
+        }
+      }
+    }
+    count - c
+  }
+
+  /** THE point estimate (reference: sketch.go:90-111, sliding/sketch.go:
+    * 131-152): the max count over rows whose cell holds fingerprint `fp`,
+    * else 0. `counts` is the plain sketch's cells or the sliding ring sums.
+    */
+  def estimate(bytes: Array[Byte], fp: Int, depth: Int, width: Int,
+               fingerprints: Array[Int], counts: Array[Long]): Long = {
+    var mx  = 0L
+    var row = 0
+    while (row < depth) {
+      val idx = Hashing.bucketIndex(bytes, row, width)
+      if (fingerprints(idx) == fp && counts(idx) > mx) mx = counts(idx)
+      row += 1
+    }
+    mx
+  }
+
+  /** Merge compatibility. Beyond geometry, k fixes the union heap's
+    * capacity (a mismatch would make the top-set size depend on which side
+    * the nondeterministic merge direction kept) and decay/seed/lutSize steer
+    * the collision paths. Partials of one query always share their config,
+    * so this rejects only genuinely mixed pipelines.
+    */
+  def requireMergeable(what: String, a: SketchConfig, b: SketchConfig): Unit = {
+    require(a.width == b.width && a.depth == b.depth, s"$what geometry mismatch")
+    require(a.k == b.k && a.decay == b.decay && a.seed == b.seed && a.lutSize == b.lutSize,
+      s"$what config mismatch: k=${a.k}/${b.k} decay=${a.decay}/${b.decay} " +
+        s"seed=${a.seed}/${b.seed} lutSize=${a.lutSize}/${b.lutSize}")
+  }
+
   /** Merge's heap rebuild: union both candidate sets, re-estimate each item
-    * against the merged cells (`countAt` abstracts counts vs countsSum), and
-    * repopulate the heap with the top-k under (count desc, item asc).
+    * against the merged cells, and repopulate the heap with the top-k under
+    * (count desc, item asc).
     */
   def rebuildHeapFromUnion(heap: MinHeap, otherEntries: Array[TopKEntry], k: Int,
                            depth: Int, width: Int, fingerprints: Array[Int],
-                           countAt: Int => Long): Unit = {
+                           counts: Array[Long]): Unit = {
     val candidates = (heap.entries ++ otherEntries).map(_.item).distinct
     val estimated = candidates.map { it =>
       val bytes = it.getBytes(StandardCharsets.UTF_8)
       val fp    = Hashing.fingerprint(bytes)
-      var mx    = 0L
-      var row   = 0
-      while (row < depth) {
-        val idx = Hashing.bucketIndex(bytes, row, width)
-        val c   = countAt(idx)
-        if (fingerprints(idx) == fp && c > mx) mx = c
-        row += 1
-      }
-      TopKEntry(fp, it, mx)
+      TopKEntry(fp, it, estimate(bytes, fp, depth, width, fingerprints, counts))
     }
     heap.reset()
     estimated.filter(_.count > 0).sortWith(entryOrder).take(k).foreach { e =>

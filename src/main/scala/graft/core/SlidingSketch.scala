@@ -17,8 +17,10 @@ final case class SlidingConfig(
     lutSize: Int = 256,
     seed: Long = 0x5eed_70c4L
 ) extends Serializable {
-  require(k > 0, s"k must be positive, got $k")
-  require(width > 0 && depth > 0, s"invalid geometry ${width}x$depth")
+  /** The per-bucket HeavyKeeper part of this config; constructing it runs
+    * SketchConfig's checks (k, geometry, decay, lutSize) for this config too.
+    */
+  private[core] val plain: SketchConfig = SketchConfig(k, width, depth, decay, lutSize, seed)
   require(windowSize > 0, s"windowSize must be positive, got $windowSize")
   require(bucketHistoryLength >= 1 && bucketHistoryLength <= windowSize,
     s"bucketHistoryLength $bucketHistoryLength outside [1, $windowSize]")
@@ -30,10 +32,6 @@ final case class SlidingConfig(
     s"geometry ${width}x$depth x hist=$bucketHistoryLength overflows the " +
       s"ring array (${width.toLong * depth * bucketHistoryLength} slots); " +
       "cap BucketHistoryLength (ring slots per bucket) below windowSize")
-  require(decay > 0f && decay <= 1f, s"decay must be in (0,1], got $decay")
-  // same guard as SketchConfig: lutSize <= 1 would divide by zero (or index
-  // negatively) in SketchOps.decayAt at the first collision decay
-  require(lutSize > 1, s"lutSize must be > 1, got $lutSize")
 }
 
 object SlidingConfig {
@@ -47,22 +45,12 @@ object SlidingConfig {
       lutSize: Int = 256,
       seed: Long = 0x5eed_70c4L
   ): SlidingConfig = {
-    val logK  = math.log(k.toDouble).toInt
-    val klogK = (k.toDouble * math.log(k.toDouble)).toInt
+    val (w, d) = SketchConfig.geometry(k, width, depth)
     // -1 = unset (defaults to windowSize); explicit values are clamped to
     // [1, windowSize] like the reference (sliding/sketch.go:68-73).
     val hist0 = if (bucketHistoryLength == -1) windowSize else bucketHistoryLength
     val hist  = math.min(math.max(hist0, 1), windowSize)
-    SlidingConfig(
-      k = k,
-      width = if (width > 0) width else math.max(256, klogK),
-      depth = if (depth > 0) depth else math.max(3, logK),
-      windowSize = windowSize,
-      bucketHistoryLength = hist,
-      decay = decay,
-      lutSize = lutSize,
-      seed = seed
-    )
+    SlidingConfig(k, w, d, windowSize, hist, decay, lutSize, seed)
   }
 }
 
@@ -194,17 +182,9 @@ final class SlidingSketch(val cfg: SlidingConfig) extends Serializable {
     var i = 0
     while (i < heap.size) {
       if (heap.countAt(i) != 0L) {
-        val item  = heap.itemAt(i)
-        val fp    = heap.fingerprintAt(i)
-        val bytes = item.getBytes(StandardCharsets.UTF_8)
-        var mx    = 0L
-        var row   = 0
-        while (row < depth) {
-          val idx = Hashing.bucketIndex(bytes, row, width)
-          if (fingerprints(idx) == fp && countsSum(idx) > mx) mx = countsSum(idx)
-          row += 1
-        }
-        heap.setCountAt(i, mx)
+        val bytes = heap.itemAt(i).getBytes(StandardCharsets.UTF_8)
+        heap.setCountAt(i, SketchOps.estimate(bytes, heap.fingerprintAt(i), depth, width,
+          fingerprints, countsSum))
       }
       i += 1
     }
@@ -257,80 +237,33 @@ final class SlidingSketch(val cfg: SlidingConfig) extends Serializable {
         countsSum(idx) = s
         if (s > maxSum) maxSum = s
       } else { // collision: decay the minimum non-zero ring slot
-        // LOCKSTEP with Sketch.updateBucket's collision branch: same trial
-        // loop shape (threshold check, geometricTrials bookkeeping,
-        // k > incrementRemaining early-out, takeover remainder), different
-        // decrement/takeover target (ring min-slot here, scalar count
-        // there). Any fix to either loop MUST be applied to both.
-        var s                  = sum
-        var incrementRemaining = increment
-        var break              = false
-        while (incrementRemaining > 0 && !break) {
-          val decay = decayAt(s)
-          if (incrementRemaining <= Sketch.GeometricSkipThreshold) {
-            // reference-exact per-trial draws
-            if (rng.nextFloat() < decay) {
-              val slot = findNonzeroMinimumSlot(idx)
-              ring(base + slot) -= 1
-              s -= 1
-              if (s == 0L) {
-                // takeover: all slots are zero; the reference writes the
-                // remaining mass at slot 0 (sliding/sketch.go:236), not at
-                // `first` — ported faithfully.
-                fingerprints(idx) = fingerprint
-                s = incrementRemaining
-                ring(base) = incrementRemaining
-                if (s > maxSum) maxSum = s
-                break = true
-              }
-            }
-            if (!break) incrementRemaining -= 1
-          } else {
-            // huge weighted adds: closed-form geometric skip (see
-            // Sketch.GeometricSkipThreshold) — one draw per decrement
-            val k = rng.geometricTrials(decay)
-            if (k > incrementRemaining) {
-              incrementRemaining = 0L
-            } else {
-              val slot = findNonzeroMinimumSlot(idx)
-              ring(base + slot) -= 1
-              s -= 1
-              if (s == 0L) {
-                fingerprints(idx) = fingerprint
-                s = incrementRemaining - (k - 1)
-                ring(base) = s
-                if (s > maxSum) maxSum = s
-                break = true
-              } else {
-                incrementRemaining -= k
-              }
-            }
-          }
+        val r = SketchOps.collide(rng, decayLUT, sum, increment)
+        if (r >= 0L) {
+          var d = r
+          while (d > 0L) { ring(base + findNonzeroMinimumSlot(idx)) -= 1; d -= 1 }
+          countsSum(idx) = sum - r
+        } else {
+          // takeover: every slot has decayed to zero; the reference writes
+          // the remaining mass at slot 0 (sliding/sketch.go:236), not at
+          // `first` — ported faithfully
+          java.util.Arrays.fill(ring, base, base + hist, 0L)
+          fingerprints(idx) = fingerprint
+          ring(base) = -r
+          countsSum(idx) = -r
+          if (-r > maxSum) maxSum = -r
         }
-        countsSum(idx) = s
       }
       row += 1
     }
     heap.update(item, fingerprint, maxSum)
   }
 
-  @inline private def decayAt(count: Long): Float =
-    SketchOps.decayAt(decayLUT, count)
-
   /** Point estimate over the window (reference: sliding/sketch.go:131-152). */
   def count(item: String): Long = {
     val tracked = heap.countOf(item)
     if (tracked >= 0) return tracked
     val bytes = item.getBytes(StandardCharsets.UTF_8)
-    val fp    = Hashing.fingerprint(bytes)
-    var mx    = 0L
-    var row   = 0
-    while (row < depth) {
-      val idx = Hashing.bucketIndex(bytes, row, width)
-      if (fingerprints(idx) == fp && countsSum(idx) > mx) mx = countsSum(idx)
-      row += 1
-    }
-    mx
+    SketchOps.estimate(bytes, Hashing.fingerprint(bytes), depth, width, fingerprints, countsSum)
   }
 
   def query(item: String): Boolean = heap.contains(item)
@@ -358,22 +291,14 @@ final class SlidingSketch(val cfg: SlidingConfig) extends Serializable {
     * aggregation, where ticks never fire mid-aggregation).
     */
   def merge(other: SlidingSketch): SlidingSketch = {
-    require(other.width == width && other.depth == depth && other.hist == hist,
-      "sliding sketch geometry mismatch")
+    require(other.hist == hist, s"sliding sketch ring length mismatch: $hist vs ${other.hist}")
     // windowSize sets the tick-ageing cadence (ticks(n) ages n·hist·m/N
     // buckets): two sketches with different N cannot have observed the same
     // tick schedule, so a silent union would mix rings aged at different
     // rates — fail fast like any other geometry mismatch
     require(other.cfg.windowSize == cfg.windowSize,
       s"sliding window size mismatch: ${cfg.windowSize} vs ${other.cfg.windowSize}")
-    // same rationale as Sketch.merge: k fixes the union heap's capacity,
-    // decay/seed steer collision paths — a mismatch makes results depend
-    // on nondeterministic merge direction instead of failing fast
-    require(other.cfg.k == cfg.k && other.cfg.decay == cfg.decay &&
-      other.cfg.seed == cfg.seed && other.cfg.lutSize == cfg.lutSize,
-      s"sliding sketch config mismatch: k=${cfg.k}/${other.cfg.k} " +
-        s"decay=${cfg.decay}/${other.cfg.decay} seed=${cfg.seed}/${other.cfg.seed} " +
-        s"lutSize=${cfg.lutSize}/${other.cfg.lutSize}")
+    SketchOps.requireMergeable("sliding sketch", cfg.plain, other.cfg.plain)
     var b = 0
     while (b < m) {
       val ca = countsSum(b); val cb = other.countsSum(b)
@@ -403,7 +328,7 @@ final class SlidingSketch(val cfg: SlidingConfig) extends Serializable {
       b += 1
     }
     SketchOps.rebuildHeapFromUnion(heap, other.heap.entries, cfg.k,
-      depth, width, fingerprints, countsSum(_))
+      depth, width, fingerprints, countsSum)
     this
   }
 }

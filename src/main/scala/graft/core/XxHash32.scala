@@ -2,6 +2,8 @@ package graft.core
 
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.unsafe.Platform
+
 /** Seeded XXH32 (32-bit xxHash), implemented from the published algorithm
   * specification (github.com/Cyan4973/xxHash doc/xxhash_spec.md).
   *
@@ -19,49 +21,14 @@ object XxHash32 {
   private final val P4 = 668265263
   private final val P5 = 374761393
 
-  @inline private def readLE(b: Array[Byte], i: Int): Int =
-    (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16) | ((b(i + 3) & 0xff) << 24)
-
   /** XXH32 of `len` bytes of `bytes` starting at `off`, with the given seed.
-    * Returns the raw 32-bit hash as an Int (interpret as unsigned).
+    * Returns the raw 32-bit hash as an Int (interpret as unsigned). The slice
+    * is range-checked here: `hashUnsafe` reads raw memory and would
+    * otherwise read past the array.
     */
   def hash(bytes: Array[Byte], off: Int, len: Int, seed: Int): Int = {
-    val end = off + len
-    var i   = off
-    var h: Int = 0
-    if (len >= 16) {
-      val limit = end - 16
-      var v1 = seed + P1 + P2
-      var v2 = seed + P2
-      var v3 = seed
-      var v4 = seed - P1
-      while (i <= limit) {
-        v1 = Integer.rotateLeft(v1 + readLE(bytes, i) * P2, 13) * P1
-        v2 = Integer.rotateLeft(v2 + readLE(bytes, i + 4) * P2, 13) * P1
-        v3 = Integer.rotateLeft(v3 + readLE(bytes, i + 8) * P2, 13) * P1
-        v4 = Integer.rotateLeft(v4 + readLE(bytes, i + 12) * P2, 13) * P1
-        i += 16
-      }
-      h = Integer.rotateLeft(v1, 1) + Integer.rotateLeft(v2, 7) +
-        Integer.rotateLeft(v3, 12) + Integer.rotateLeft(v4, 18)
-    } else {
-      h = seed + P5
-    }
-    h += len
-    while (i + 4 <= end) {
-      h = Integer.rotateLeft(h + readLE(bytes, i) * P3, 17) * P4
-      i += 4
-    }
-    while (i < end) {
-      h = Integer.rotateLeft(h + (bytes(i) & 0xff) * P5, 11) * P1
-      i += 1
-    }
-    h ^= h >>> 15
-    h *= P2
-    h ^= h >>> 13
-    h *= P3
-    h ^= h >>> 16
-    h
+    java.util.Objects.checkFromIndexSize(off, len, bytes.length)
+    hashUnsafe(bytes, Platform.BYTE_ARRAY_OFFSET + off, len, seed)
   }
 
   def hash(bytes: Array[Byte], seed: Int): Int = hash(bytes, 0, bytes.length, seed)
@@ -69,23 +36,23 @@ object XxHash32 {
   def hashString(s: String, seed: Int): Int =
     hash(s.getBytes(StandardCharsets.UTF_8), seed)
 
-  /** Off-heap / any-base variant (Spark `Platform` unaligned reads): hashes
-    * UTF8String payloads in place, no per-row byte-array copy. Same result
-    * as `hash` for the same bytes (little-endian reads on both paths).
-    */
-  // Platform.getInt reads in NATIVE byte order while `hash` reads explicit
-  // little-endian; byte-swap on big-endian JVMs so the two paths can never
-  // silently place the same bytes in different buckets.
+  // Platform.getInt reads in NATIVE byte order while XXH32 is defined over
+  // little-endian words; byte-swap on big-endian JVMs so a hash never
+  // depends on the host.
   private final val BigEndian =
     java.nio.ByteOrder.nativeOrder() == java.nio.ByteOrder.BIG_ENDIAN
 
   @inline private def readLEUnsafe(base: AnyRef, i: Long): Int = {
-    val v = org.apache.spark.unsafe.Platform.getInt(base, i)
+    val v = Platform.getInt(base, i)
     if (BigEndian) Integer.reverseBytes(v) else v
   }
 
+  /** THE XXH32 body, over `len` bytes at `offset` of any memory base (Spark
+    * `Platform` unaligned reads): byte arrays via `hash`, UTF8String
+    * payloads in place with no per-row copy. No range check — the caller
+    * owns the bounds.
+    */
   def hashUnsafe(base: AnyRef, offset: Long, len: Int, seed: Int): Int = {
-    import org.apache.spark.unsafe.Platform
     val end = offset + len
     var i   = offset
     var h: Int = 0
@@ -134,9 +101,6 @@ object Hashing {
   @inline def fingerprint(bytes: Array[Byte]): Int =
     XxHash32.hash(bytes, FingerprintSeed)
 
-  @inline def fingerprint(bytes: Array[Byte], off: Int, len: Int): Int =
-    XxHash32.hash(bytes, off, len, FingerprintSeed)
-
   @inline def fingerprint(item: String): Int =
     XxHash32.hashString(item, FingerprintSeed)
 
@@ -144,15 +108,15 @@ object Hashing {
     * Go computes `int(uint32) % width` — a non-negative 64-bit mod; mirror that
     * by widening the unsigned 32-bit value to Long before the mod.
     */
-  @inline def bucketIndex(bytes: Array[Byte], row: Int, width: Int): Int = {
-    val h = XxHash32.hash(bytes, row)
-    row * width + ((h & 0xffffffffL) % width).toInt
-  }
+  @inline def bucketIndex(bytes: Array[Byte], row: Int, width: Int): Int =
+    cell(XxHash32.hash(bytes, row), row, width)
 
-  @inline def bucketIndex(bytes: Array[Byte], off: Int, len: Int, row: Int, width: Int): Int = {
-    val h = XxHash32.hash(bytes, off, len, row)
+  /** `bucketIndex` over raw memory (see XxHash32.hashUnsafe). */
+  @inline def bucketIndexUnsafe(base: AnyRef, offset: Long, len: Int, row: Int, width: Int): Int =
+    cell(XxHash32.hashUnsafe(base, offset, len, row), row, width)
+
+  @inline private def cell(h: Int, row: Int, width: Int): Int =
     row * width + ((h & 0xffffffffL) % width).toInt
-  }
 
   @inline def bucketIndex(item: String, row: Int, width: Int): Int =
     bucketIndex(item.getBytes(java.nio.charset.StandardCharsets.UTF_8), row, width)

@@ -487,7 +487,8 @@ object Dedup {
     *
     * `narrowToCandidates` tuning: with narrowing on, AQE reuses the
     * candidate subplan for the ids semi-join (ReusedExchange on the pair
-    * distinct — the pipeline does NOT run twice; tools/ProbeNgramPlan),
+    * distinct — the executed plan on the sf0.01 documents shows the
+    * ReusedExchange and the pipeline does NOT run twice),
     * so the residual cost is the extra union/distinct/semi-join exchanges.
     * On a candidate-DENSE corpus (the 30%-dup scale rehearsal) that
     * overhead exceeds the saving — `Some(false)` measured 1.33x faster

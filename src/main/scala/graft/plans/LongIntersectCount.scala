@@ -24,6 +24,18 @@ import org.apache.spark.sql.types._
   */
 object LongIntersectCount {
 
+  /** Power-of-two open-addressing capacity (min 8) holding `n` keys at
+    * load factor <= 0.5. Sized in Long: an Int `cap < n * 2` wraps for
+    * n >= 2^30 and then never terminates. Larger tables cannot be allocated,
+    * so they are rejected.
+    */
+  def tableCapacity(n: Int): Int = {
+    var cap = 8L
+    while (cap < 2L * n) cap <<= 1
+    require(cap <= (1 << 30), s"array of $n elements exceeds the largest intersect table (2^30 slots)")
+    cap.toInt
+  }
+
   /** Runtime kernel (also the codegen target — static call). Builds the
     * table from the smaller array (load factor <= 0.5), probes with the
     * larger; per-slot matched flags make duplicate probe values count once,
@@ -36,8 +48,7 @@ object LongIntersectCount {
     val nb = b.numElements()
     if (na == 0 || nb == 0) return 0
     val (s, p, ns, np) = if (na <= nb) (a, b, na, nb) else (b, a, nb, na)
-    var cap = 8
-    while (cap < ns * 2) cap <<= 1
+    val cap     = tableCapacity(ns)
     val mask    = cap - 1
     val table   = new Array[Long](cap)
     val matched = new Array[Boolean](cap)

@@ -101,8 +101,8 @@ case class SketchRowsExpr(left: Expression, right: Expression)
   * equality (a ~12 KB memcmp, ~10-40x cheaper than re-decoding: decode
   * allocates + parses the cell arrays and replays the heap). Rows with
   * genuinely distinct blobs miss and pay exactly the old per-row decode.
-  * Micro-bench (tools/ProbeHot pattern, 100k lookup rows over one 12 KB
-  * blob, local[1]): ~6x faster end-to-end than decode-per-row.
+  * Measured wall clock, 100k lookup rows over one 12 KB blob at local[1]:
+  * ~6x faster end-to-end than decode-per-row.
   * Racing tasks sharing an instance can only swap in another valid pair
   * (single reference assignment), never a torn state.
   *

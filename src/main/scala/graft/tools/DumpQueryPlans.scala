@@ -3,8 +3,6 @@ package graft.tools
 import java.io.{ByteArrayOutputStream, PrintStream}
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` output for named SparkEntry queries (plus
   * the bench token jobs) to `<outDir>/<name>_<suffix>.txt` — the
   * before/after plan evidence for optimization rounds. Uses Bench's exact
@@ -20,18 +18,7 @@ object DumpQueryPlans {
     val outDir = args(1)
     val suffix = args(2)
     val names  = args.drop(3).toSeq
-    val cpus   = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark  = graft.BenchSession.create()
     Files.createDirectories(Paths.get(outDir))
 
     import org.apache.spark.sql.DataFrame

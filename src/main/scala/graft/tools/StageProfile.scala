@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-stage wall/task-time attribution for a named SparkEntry query (or
   * bench token job): which stages a query's seconds actually go to — the
@@ -19,18 +18,7 @@ object StageProfile {
     val sfDir = args(0)
     val reps  = args(1).toInt
     val name  = args(2)
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.BenchSession.create()
 
     lazy val benchDir = graft.Bench.ensureBenchTable(spark)._1
     val run: () => Unit = name match {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Isolated re-measure of named SparkEntry queries with Bench's exact confs —
   * the tool to run before believing (or disbelieving) any BENCH_rN.json
   * number: `runMain graft.tools.TimeQuery <sfDir> <reps> <name> [name ...]`.
@@ -12,18 +10,7 @@ object TimeQuery {
     val sfDir = args(0)
     val reps  = args(1).toInt
     val names = args.drop(2).toSeq
-    val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "2m")
-      .config("spark.sql.files.openCostInBytes", "262144")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "131072")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.BenchSession.create()
     // the four tokens_* bench jobs run on the synthetic bench table, so the
     // full BENCH_LOCAL_BASELINE key set regenerates from this one tool
     lazy val benchDir = graft.Bench.ensureBenchTable(spark)._1

@@ -80,4 +80,23 @@ class XxHash32Spec extends AnyFunSuite {
     // exact placement: column = (hash as uint32) mod width
     assert(Hashing.bucketIndex("Y", 0, 10) == ((0xe2eccaa5L & 0xffffffffL) % 10).toInt)
   }
+
+  test("hash range-checks its slice: out-of-range off/len throws, never reads past the array") {
+    val bytes = Array.tabulate[Byte](40)(_.toByte)
+    for ((off, len) <- Seq((0, 41), (30, 11), (-1, 4), (5, -1), (40, 1), (Int.MaxValue, 16)))
+      intercept[IndexOutOfBoundsException](XxHash32.hash(bytes, off, len, 0))
+    // the empty slice at the end is in range
+    assert(XxHash32.hash(bytes, 40, 0, 0) == XxHash32.hashString("", 0))
+  }
+
+  test("hashUnsafe over a sliced UTF8String equals hash over the same bytes") {
+    import org.apache.spark.unsafe.types.UTF8String
+    for (item <- Seq("", "abc", "日本語", "a😀b", "x" * 15, "y" * 16, "混合 mixed 😀 payload over sixteen bytes");
+         seed <- Seq(0, 3, Hashing.FingerprintSeed)) {
+      val bytes = item.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+      val u     = UTF8String.fromBytes(Array[Byte](9, 9, 9) ++ bytes ++ Array[Byte](9), 3, bytes.length)
+      assert(XxHash32.hashUnsafe(u.getBaseObject, u.getBaseOffset, u.numBytes, seed) ==
+        XxHash32.hash(bytes, seed), s"hashUnsafe($item, $seed)")
+    }
+  }
 }

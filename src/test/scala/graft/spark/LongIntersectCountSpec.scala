@@ -61,4 +61,14 @@ class LongIntersectCountSpec extends AnyFunSuite {
       assert(r.getInt(0) == r.getInt(1), s"($a, $b): native=${r.getInt(0)} builtin=${r.getInt(1)}")
     }
   }
+
+  test("table capacity: power of two at load <= 0.5, oversized inputs rejected instead of looping") {
+    assert(LongIntersectCount.tableCapacity(1) == 8)
+    assert(LongIntersectCount.tableCapacity(4) == 8)
+    assert(LongIntersectCount.tableCapacity(5) == 16)
+    assert(LongIntersectCount.tableCapacity(1 << 29) == (1 << 30))
+    // an Int `cap < n * 2` wraps here and never terminates
+    intercept[IllegalArgumentException](LongIntersectCount.tableCapacity(1 << 30))
+    intercept[IllegalArgumentException](LongIntersectCount.tableCapacity(Int.MaxValue))
+  }
 }
